@@ -8,16 +8,17 @@ All variants are pure DataFrame compositions (JVM-side, no Python UDFs):
                              (exact when ``max_shingle_freq=None``;
                              the default caps hot shingles — the
                              oracle mirrors the cap in SQL).
-- ``minhash_signature``    — k-permutation MinHash as k JVM aggregations
-                             over xxhash64(shingle) (no UDF, no
-                             pyspark.ml dependency).
-- ``minhash_lsh_pairs``    — banded LSH candidate pairs + exact-Jaccard
+- ``minhash_lsh_pairs``    — k-permutation MinHash signatures (k JVM
+                             min-aggregations, no UDF), banded LSH
+                             candidate pairs + exact-Jaccard
                              verification: the 100 TB-scale path (only
                              banded-bucket collisions are joined, never
                              all pairs).
 - ``simhash_signature``    — 64-bit SimHash via per-bit conditional sums.
-- ``simhash_pairs``        — hamming<=k pairs via 4-chunk pigeonhole
-                             banding + bit_count(xor) verify.
+- ``simhash_pairs``        — hamming<=k pairs via ``hamming_band_pairs``.
+- ``hamming_band_pairs``   — (k+1)-chunk pigeonhole banding over any
+                             64-bit hash column + bit_count(xor) verify
+                             (text SimHash and image phash share it).
 - ``embedding_dup_pairs``  — cosine>=t pairs (brute force small-N oracle
                              form; LSH-bucketed scale path lives in
                              similarity.py).
@@ -26,6 +27,13 @@ Scale notes: every pair-finder shuffles on a *blocking key* (shingle,
 LSH band, simhash chunk) rather than cross-joining; hot shingles (stop
 phrases) are capped with a frequency filter — the same salting philosophy
 as the KG linking stage (BASELINE.json:L14).
+
+Hash families: the MinHash and SimHash operators take ``family`` —
+``"xxhash64"`` (JVM long arithmetic, the production scale path) or
+``"md5"`` (hex-string values that DuckDB computes byte-identically).
+Only the hash changes; shingling, banding, the candidate self-join and
+the exact verify are one code path, so the md5 registry twins
+(plans/queries.py ``dedup_*_md5``) value-check the production operator.
 """
 
 from __future__ import annotations
@@ -33,7 +41,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_MERSENNE = (1 << 61) - 1  # legacy constant (canonicalize import compat)
 _MERSENNE31 = (1 << 31) - 1
 
 
@@ -66,6 +73,40 @@ def ngram_shingles(text_col: str | Column, n: int = 3) -> Column:
     idx = F.when(F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1)))
     grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
     return F.coalesce(F.array_distinct(grams), F.array().cast("array<string>"))
+
+
+def hashed_shingles_frame(
+    docs: DataFrame,
+    n: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Exploded (doc, sh) frame with shingles hashed to longs —
+    ``xxhash64`` over the sliced token ARRAY, so the n-gram string is
+    never materialized and the widest shuffle moves 8-byte keys
+    (collision odds ~m²/2⁶⁵). Token boundaries stay significant because
+    xxhash64 mixes per-element, so hashing the sliced ARRAY keys the
+    same shingles as hashing the joined string. Docs with < n tokens
+    emit no rows (NULL index array; see ngram_shingles for why
+    greatest() can't express this) — a short doc has zero shingles,
+    zero pairs, matching the oracles."""
+    toks = F.split(
+        F.col(text_col) if isinstance(text_col, str) else text_col, " "
+    )
+    return docs.select(
+        F.col(id_col).alias("doc"),
+        F.explode(
+            F.array_distinct(
+                F.transform(
+                    F.when(
+                        F.size(toks) >= n,
+                        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+                    ),
+                    lambda i: F.xxhash64(F.slice(toks, i, n)),
+                )
+            )
+        ).alias("sh"),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -125,35 +166,14 @@ def ngram_jaccard_pairs(
     inverted-index formulation — and AQE's skew-join split applies
     when hot keys cluster in a partition.
     """
-    toks = F.split(
-        F.col(text_col) if isinstance(text_col, str) else text_col, " "
-    )
-    sh = docs.select(
-        F.col(id_col).alias("doc"),
-        # token boundaries stay significant because xxhash64 mixes
-        # per-element, so hashing the sliced ARRAY keys the same
-        # shingles as hashing the joined string. Docs with < n tokens
-        # get a NULL index array (see ngram_shingles for why greatest()
-        # can't express this); explode(NULL) emits no rows, matching
-        # the oracle — a short doc has zero shingles, zero pairs.
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= n,
-                        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    ),
-                    lambda i: F.xxhash64(F.slice(toks, i, n)),
-                )
-            )
-        ).alias("sh"),
-    )
     # Spark re-derives lineage at every reference — freq, sizes and the
     # two join sides would otherwise re-run the scan+explode four
     # times. A LAZY localCheckpoint materializes the exploded frame
     # once in the block manager (memory-with-disk-spill) and truncates
     # the lineage for every downstream branch.
-    sh = sh.localCheckpoint(eager=False)
+    sh = hashed_shingles_frame(docs, n, id_col, text_col).localCheckpoint(
+        eager=False
+    )
     if max_shingle_freq is not None:
         hot = (
             sh.groupBy("sh")
@@ -181,37 +201,6 @@ def ngram_jaccard_pairs(
         .join(sb, "id_b")
         .filter(ratio >= threshold)
         .select("id_a", "id_b", F.round(ratio, 6).alias("jaccard"))
-    )
-
-
-def hashed_shingles_frame(
-    docs: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exploded (doc, sh) frame with shingles hashed to longs —
-    ``xxhash64`` over the sliced token ARRAY, so the n-gram string is
-    never materialized and the widest shuffle moves 8-byte keys (the
-    same trick as ngram_jaccard_pairs; collision odds ~m²/2⁶⁵).
-    Docs with < n tokens emit no rows (NULL index array; see
-    ngram_shingles for why greatest() can't express this)."""
-    toks = F.split(
-        F.col(text_col) if isinstance(text_col, str) else text_col, " "
-    )
-    return docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= n,
-                        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    ),
-                    lambda i: F.xxhash64(F.slice(toks, i, n)),
-                )
-            )
-        ).alias("sh"),
     )
 
 
@@ -295,29 +284,14 @@ def hash32_expr(col: str | Column) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(1 << 32))
 
 
-def minhash_signature(
-    docs: DataFrame,
-    k: int = 32,
-    n: int = 3,
-    seed: int = 42,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """doc -> array<long> of k min-hashes, all JVM-side.
+_FAMILIES = ("xxhash64", "md5")
 
-    h_i(s) = (a_i * h32(s) + b_i) mod (2^31-1) over a 32-bit fold of
-    xxhash64; signature element i is min over the doc's shingles — k
-    aggregations in ONE groupBy pass (map-side partial min, long-only
-    arithmetic inside codegen, no UDF, no per-row Python).
-    """
-    sh = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(ngram_shingles(text_col, n)).alias("sh"),
-    ).withColumn("h", hash32_expr("sh"))
-    sig = sh.groupBy("doc").agg(*minhash_aggs("h", k, seed))
-    return sig.select(
-        "doc", F.array(*[f"mh_{i}" for i in range(k)]).alias("signature")
-    )
+
+def _check_family(family: str) -> None:
+    if family not in _FAMILIES:
+        raise ValueError(
+            f"unknown hash family {family!r}; expected one of {_FAMILIES}"
+        )
 
 
 def minhash_lsh_pairs(
@@ -329,6 +303,7 @@ def minhash_lsh_pairs(
     seed: int = 42,
     id_col: str = "doc_id",
     text_col: str = "text",
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs: banded-LSH blocking then exact-Jaccard verify.
 
@@ -336,7 +311,21 @@ def minhash_lsh_pairs(
     values hashed together); each candidate is verified with the exact
     n-gram Jaccard so output has no false positives — the LSH only
     bounds recall/cost. Shuffles on band-hash only; never all-pairs.
+
+    Signature element i is the min over the doc's shingles of —
+
+    - ``family="xxhash64"``: (a_i * h32(s) + b_i) mod (2^31-1) over a
+      32-bit fold of xxhash64 (``minhash_aggs``: long-only arithmetic
+      inside codegen, map-side partial min);
+    - ``family="md5"``: md5('i:' || s) as a hex string (string MIN is
+      the min-hash; ``seed`` is unused), which DuckDB computes
+      byte-identically — the oracle twin's family.
+
+    The band key is xxhash64 over the band's signature slice for both
+    families; a 64-bit collision can only add a candidate, and every
+    candidate is verified exactly.
     """
+    _check_family(family)
     rows = k // bands
     # ONE shingle computation for the whole operator: the shingle-set
     # frame is lazily checkpointed and feeds BOTH the signature branch
@@ -346,10 +335,13 @@ def minhash_lsh_pairs(
     texts = docs.select(
         F.col(id_col).alias("doc"), ngram_shingles(text_col, n).alias("shset")
     ).localCheckpoint(eager=False)
-    sh = texts.select("doc", F.explode("shset").alias("sh")).withColumn(
-        "h", hash32_expr("sh")
-    )
-    sig = sh.groupBy("doc").agg(*minhash_aggs("h", k, seed)).select(
+    sh = texts.select("doc", F.explode("shset").alias("sh"))
+    if family == "xxhash64":
+        sh = sh.withColumn("h", hash32_expr("sh"))
+        aggs = minhash_aggs("h", k, seed)
+    else:
+        aggs = [F.expr(f"min(md5(concat('{i}:', sh))) AS mh_{i}") for i in range(k)]
+    sig = sh.groupBy("doc").agg(*aggs).select(
         "doc", F.array(*[f"mh_{i}" for i in range(k)]).alias("signature")
     )
     banded = sig.select(
@@ -375,19 +367,28 @@ def minhash_lsh_pairs(
     )
     ta = texts.select(F.col("doc").alias("id_a"), F.col("shset").alias("sha"))
     tb = texts.select(F.col("doc").alias("id_b"), F.col("shset").alias("shb"))
+    # gate on the UNROUNDED ratio, round only the emitted column (same
+    # convention as ngram_jaccard_pairs and the oracles' WHERE)
+    ratio = F.size(F.array_intersect("sha", "shb")) / F.size(
+        F.array_union("sha", "shb")
+    )
     return (
         cand.join(ta, "id_a")
         .join(tb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sha", "shb"))
-                / F.size(F.array_union("sha", "shb")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .filter(ratio >= threshold)
+        .select("id_a", "id_b", F.round(ratio, 6).alias("jaccard"))
+    )
+
+
+def _simhash_bit_test(family: str, i: int) -> str:
+    """SQL predicate: bit ``i`` of shingle hash ``h`` is set. md5 reads
+    bit (i mod 4) of hex digit i//4 with pure mod/compare arithmetic
+    ((d % 2^(k+1)) >= 2^k), so DuckDB evaluates it identically."""
+    if family == "xxhash64":
+        return f"(shiftright(h, {i}) & 1) = 1"
+    return (
+        f"((instr('0123456789abcdef', substr(h, {i // 4 + 1}, 1)) - 1) "
+        f"% {2 ** (i % 4 + 1)}) >= {2 ** (i % 4)}"
     )
 
 
@@ -396,8 +397,13 @@ def simhash_signature(
     bits: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
+    n: int = 1,
+    family: str = "xxhash64",
 ) -> DataFrame:
-    """doc -> 64-bit SimHash (long) via per-bit conditional sums.
+    """doc -> 64-bit SimHash (long) via per-bit conditional sums over
+    the doc's distinct word n-gram shingles; the shingle hash is
+    xxhash64 (long bit ops) or md5 (hex-digit bits, the oracle twin's
+    family — see ``_simhash_bit_test``). Bit i packs at weight 2^i.
 
     The 64 bit-count aggregates and the 64-term signature rebuild are
     each parsed from ONE SQL string (``F.expr``): building them from
@@ -407,12 +413,14 @@ def simhash_signature(
     The parsed expressions are identical (same shiftright/IF semantics;
     ``shiftleft(1L, 63)`` IS two's-complement min-long, covering the
     top-bit weight the old chained form special-cased)."""
+    _check_family(family)
+    hash_fn = F.xxhash64 if family == "xxhash64" else F.md5
     toks = docs.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
+        F.explode(ngram_shingles(text_col, n)).alias("sh"),
+    ).withColumn("h", hash_fn("sh"))
     bit_aggs = [
-        F.expr(f"sum(IF((shiftright(h, {i}) & 1) = 1, 1, -1)) AS b_{i}")
+        F.expr(f"sum(IF({_simhash_bit_test(family, i)}, 1, -1)) AS b_{i}")
         for i in range(bits)
     ]
     agg = toks.groupBy("doc").agg(*bit_aggs)
@@ -422,13 +430,12 @@ def simhash_signature(
     return agg.select("doc", F.expr(f"{sig} AS simhash"))
 
 
-def _simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
+def _hamming_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
     """(offset, width) per pigeonhole chunk: the 64 bits split into
     ``max_hamming + 1`` near-equal chunks, so any pair within hamming
     distance ``max_hamming`` has at least one chunk with ZERO differing
     bits (pigeonhole) — banding is recall-complete for the requested
-    distance, whatever it is (round-1 judge finding: the old fixed
-    4-chunk split was only complete for hamming <= 3)."""
+    distance, whatever it is."""
     n_chunks = min(max_hamming + 1, 64)
     base, extra = divmod(64, n_chunks)
     bounds = []
@@ -440,15 +447,66 @@ def _simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
     return bounds
 
 
+def hamming_band_pairs(
+    sig: DataFrame, id_col: str, hash_col: str, max_hamming: int
+) -> DataFrame:
+    """(id_a, id_b, hamming) for every pair of 64-bit ``hash_col``
+    values within ``max_hamming`` bits, by pigeonhole banding on
+    ``max_hamming + 1`` chunks: any such pair agrees exactly on at least
+    one chunk, so candidates join on (chunk_idx, chunk_value) and verify
+    with bit_count(xor). Shuffles on the chunk key only — never
+    all-pairs. ``sig`` is read by both join sides; callers checkpoint it
+    when its lineage is expensive.
+
+    Multi-chunk collisions are deduped WITHOUT a shuffle: a pair appears
+    in the banded join once per agreeing chunk, and the set of agreeing
+    chunks is computable IN-ROW from ``ha ^ hb`` — the pair is kept only
+    at its FIRST agreeing chunk, a map-side filter where ``.distinct()``
+    would shuffle every collision row (the dominant shuffle at high pair
+    density).
+    """
+    bounds = _hamming_chunk_bounds(max_hamming)
+
+    def chunk(c: Column, off: int, width: int) -> Column:
+        return F.shiftrightunsigned(c, off).bitwiseAND(F.lit((1 << width) - 1))
+
+    chunks = sig.select(
+        id_col,
+        hash_col,
+        F.posexplode(
+            F.array(*[chunk(F.col(hash_col), off, w) for off, w in bounds])
+        ).alias("chunk", "cv"),
+    )
+    a = chunks.select(
+        F.col(id_col).alias("id_a"), F.col(hash_col).alias("ha"), "chunk", "cv"
+    )
+    b = chunks.select(
+        F.col(id_col).alias("id_b"), F.col(hash_col).alias("hb"), "chunk", "cv"
+    )
+    x = F.expr("ha ^ hb")
+    agree_flags = F.array(
+        *[(chunk(x, off, w) == 0).cast("int") for off, w in bounds]
+    )
+    first_agree = F.array_position(agree_flags, 1) - 1
+    return (
+        a.join(b, ["chunk", "cv"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(F.col("chunk") == first_agree)
+        .select("id_a", "id_b", F.bit_count(x).alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
+    n: int = 1,
+    family: str = "xxhash64",
 ) -> DataFrame:
-    """Hamming<=k pairs by pigeonhole banding on ``k+1`` chunks: any pair
-    within distance k agrees exactly on at least one chunk, so candidates
-    join on (chunk_idx, chunk_value) and verify with bit_count(xor).
+    """Hamming<=k SimHash pairs (``hamming_band_pairs`` over
+    ``simhash_signature``).
 
     Cost scales with chunk-collision rate: large ``max_hamming`` means
     narrow chunks and many candidate collisions — keep it small (<=3 for
@@ -456,59 +514,10 @@ def simhash_pairs(
     """
     # both join sides reference the signature frame — checkpoint it so
     # the 64-bit-agg lineage runs once, not twice
-    sig = simhash_signature(docs, id_col=id_col, text_col=text_col).localCheckpoint(
-        eager=False
-    )
-    chunks = sig.select(
-        "doc",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", off)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    for off, width in _simhash_chunk_bounds(max_hamming)
-                ]
-            )
-        ).alias("chunk", "cv"),
-    )
-    a = chunks.select(
-        F.col("doc").alias("id_a"), F.col("simhash").alias("ha"), "chunk", "cv"
-    )
-    b = chunks.select(
-        F.col("doc").alias("id_b"), F.col("simhash").alias("hb"), "chunk", "cv"
-    )
-    joined = a.join(b, ["chunk", "cv"]).filter(F.col("id_a") < F.col("id_b"))
-    return _first_agreeing_chunk_pairs(joined, max_hamming)
-
-
-def _first_agreeing_chunk_pairs(joined: DataFrame, max_hamming: int) -> DataFrame:
-    """Dedupe multi-chunk collisions WITHOUT a shuffle: a pair appears
-    in the banded join once per agreeing chunk, and the set of agreeing
-    chunks is computable IN-ROW from ``ha ^ hb`` — keep the pair only at
-    its FIRST agreeing chunk. This replaces the old ``.distinct()`` (a
-    full shuffle of every collision row — the dominant shuffle at high
-    pair density) with a map-side filter; the output pair set is
-    identical since every qualifying pair meets at each agreeing chunk.
-
-    ``joined`` must carry columns (id_a, id_b, ha, hb, chunk).
-    """
-    x = F.expr("ha ^ hb")
-    agree_flags = F.array(
-        *[
-            (
-                F.shiftrightunsigned(x, off).bitwiseAND(F.lit((1 << width) - 1))
-                == 0
-            ).cast("int")
-            for off, width in _simhash_chunk_bounds(max_hamming)
-        ]
-    )
-    first_agree = F.array_position(agree_flags, 1) - 1
-    return (
-        joined.filter(F.col("chunk") == first_agree)
-        .select("id_a", "id_b", F.bit_count(x).alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    sig = simhash_signature(
+        docs, id_col=id_col, text_col=text_col, n=n, family=family
+    ).localCheckpoint(eager=False)
+    return hamming_band_pairs(sig, "doc", "simhash", max_hamming)
 
 
 def embedding_dup_pairs(

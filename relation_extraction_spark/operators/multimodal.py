@@ -786,15 +786,14 @@ def near_dup_images(meta: DataFrame) -> DataFrame:
 
 def near_dup_image_pairs(meta: DataFrame, max_hamming: int = 3) -> DataFrame:
     """TRUE near-dup pairs: hamming(phash_a, phash_b) <= k via the same
-    pigeonhole banding as text SimHash (operators/dedup.py): the 64 bits
-    split into k+1 chunks, any pair within distance k agrees exactly on
-    at least one chunk, so candidates join on (chunk_idx, chunk_value)
-    and verify with bit_count(xor). Shuffles on the chunk key only —
-    never all-pairs (round-2 judge fix: crc32 had no locality, so
-    'near-dup' was exact-dup in disguise)."""
+    pigeonhole banding as text SimHash (``dedup.hamming_band_pairs``):
+    the 64 bits split into k+1 chunks, any pair within distance k agrees
+    exactly on at least one chunk, so candidates join on (chunk_idx,
+    chunk_value) and verify with bit_count(xor). Shuffles on the chunk
+    key only — never all-pairs."""
     from pyspark.sql import functions as F
 
-    from .dedup import _simhash_chunk_bounds
+    from .dedup import hamming_band_pairs
 
     # both join sides reference the metadata frame; without the lazy
     # checkpoint each would re-run the (Python) decode pass upstream
@@ -803,27 +802,4 @@ def near_dup_image_pairs(meta: DataFrame, max_hamming: int = 3) -> DataFrame:
         .select("media_id", "phash")
         .localCheckpoint(eager=False)
     )
-    chunks = sig.select(
-        "media_id",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("phash", off).bitwiseAND(
-                        F.lit((1 << width) - 1)
-                    )
-                    for off, width in _simhash_chunk_bounds(max_hamming)
-                ]
-            )
-        ).alias("chunk", "cv"),
-    )
-    a = chunks.select(
-        F.col("media_id").alias("id_a"), F.col("phash").alias("ha"), "chunk", "cv"
-    )
-    b = chunks.select(
-        F.col("media_id").alias("id_b"), F.col("phash").alias("hb"), "chunk", "cv"
-    )
-    from .dedup import _first_agreeing_chunk_pairs
-
-    joined = a.join(b, ["chunk", "cv"]).filter(F.col("id_a") < F.col("id_b"))
-    return _first_agreeing_chunk_pairs(joined, max_hamming)
+    return hamming_band_pairs(sig, "media_id", "phash", max_hamming)

@@ -45,7 +45,6 @@ from ..sources.dictionary import entity_dictionary
 from ..sources.lakehouse import SnapshotTable
 
 STAGES = ["ingest", "extract", "link", "canonicalize", "materialize", "metrics"]
-N_PART_KEYS = 64  # lineage granularity: pmod(xxhash64(url), 64)
 
 LINEAGE_SCHEMA = pa.schema(
     [
@@ -93,10 +92,6 @@ class PipelineConfig:
     run_id: str = "run-0"
     input_parquet: str | None = None  # pre-generated corpus (bench path)
     extra_tables: dict = field(default_factory=dict)
-
-
-def _part_key(col: str = "url") -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(N_PART_KEYS)).cast("int")
 
 
 class Pipeline:
@@ -181,7 +176,6 @@ class Pipeline:
         headline: tuple[str, float | str],
         t0: float,
         lineage_table: str | None = None,
-        lineage_key: str = "url",  # retained for API compat; file-level lineage ignores it
     ) -> dict:
         """Commit outputs, then derive lineage + the headline metric from
         the COMMITTED snapshots (manifest row counts / parquet rescans) so

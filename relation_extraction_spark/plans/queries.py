@@ -1059,14 +1059,15 @@ def q_dedup_embedding(spark, sf):
 
 @q(
     "dedup_minhash_lsh_md5",
-    # the MinHash-LSH ALGORITHM under a full value oracle: the
-    # production variant (dedup_minhash_lsh below) hashes with JVM
-    # xxhash64 (no DuckDB equivalent -> rows-only), but the algorithm
-    # itself — k min-hashes, banded blocking, candidate self-join,
-    # exact-Jaccard verify — is hash-family-agnostic. This twin uses
-    # min(md5(seed || shingle)) as the permutation family (md5 hex is
-    # byte-identical across engines, string MIN is the min-hash), so
-    # every step runs verbatim in DuckDB. k=8, 4 bands of 2 rows,
+    # the production MinHash-LSH operator under a full value oracle:
+    # dedup_minhash_lsh below hashes with JVM xxhash64 (no DuckDB
+    # equivalent -> rows-only); this twin calls the same operator with
+    # family="md5", min(md5(i || ':' || shingle)) as the permutation
+    # family (md5 hex is byte-identical across engines, string MIN is
+    # the min-hash), so every step runs verbatim in DuckDB. The SQL
+    # bands on the concatenated values, the operator on their xxhash64
+    # — equal candidates up to a 64-bit collision, which the exact
+    # verify removes. k=8, 4 bands of 2 rows,
     # word-bigram shingles, jaccard >= 0.3 on en docs — parameters
     # mirror dedup_ngram_jaccard so the verified pair lists are
     # comparable.
@@ -1101,76 +1102,13 @@ def q_dedup_embedding(spark, sf):
     "WHERE CAST(c AS DOUBLE) / (za.sz + zb.sz - c) >= 0.3",
 )
 def q_dedup_minhash_md5(spark, sf):
-    # Same plan shape as the production LSH (banded blocking keys, only
-    # bucket collisions joined, exact verify on candidates), hash family
-    # swapped to cross-engine md5 strings. The string min-aggs are
-    # heavier than the JVM long path — this query exists to VERIFY the
-    # algorithm, the xxhash64 variant is the scale path.
+    # The production operator with the md5 family: shingling, banding,
+    # the candidate self-join and the exact verify are the code
+    # dedup_minhash_lsh runs, so this oracle row vouches for it.
+    from ..operators.dedup import minhash_lsh_pairs
+
     docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    toks = F.split(F.col("text"), " ")
-    sh = docs.select(
-        F.col("doc_id").alias("doc"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= 2,
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                    ),
-                    lambda i: F.array_join(F.slice(toks, i, 2), " "),
-                )
-            )
-        ).alias("sh"),
-    ).localCheckpoint(eager=False)
-    sig = sh.groupBy("doc").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(
-                f"mh_{i}"
-            )
-            for i in range(8)
-        ]
-    )
-    banded = sig.select(
-        "doc",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bh"),
-    )
-    a = banded.select(F.col("doc").alias("id_a"), "band", "bh")
-    b = banded.select(F.col("doc").alias("id_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    com = (
-        cand.join(sh.select(F.col("doc").alias("id_a"), "sh"), "id_a")
-        .join(
-            sh.select(F.col("doc").alias("id_b"), F.col("sh").alias("sh")),
-            ["id_b", "sh"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    za = sizes.select(F.col("doc").alias("id_a"), F.col("sz").alias("sza"))
-    zb = sizes.select(F.col("doc").alias("id_b"), F.col("sz").alias("szb"))
-    # Gate on the unrounded ratio exactly as the oracle's WHERE does;
-    # round only the emitted column (same convention as
-    # ngram_jaccard_pairs since round 5).
-    ratio = F.col("c") / (F.col("sza") + F.col("szb") - F.col("c"))
-    return (
-        com.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(ratio >= 0.3)
-        .select("id_a", "id_b", F.round(ratio, 6).alias("jaccard"))
-    )
+    return minhash_lsh_pairs(docs, threshold=0.3, k=8, bands=4, n=2, family="md5")
 
 
 def _simhash_md5_oracle() -> str:
@@ -1214,78 +1152,14 @@ def _simhash_md5_oracle() -> str:
 
 @q("dedup_simhash_md5", _simhash_md5_oracle())
 def q_dedup_simhash_md5(spark, sf):
-    # the SimHash ALGORITHM under a full value oracle (companion to
-    # dedup_minhash_lsh_md5): per-bit majority vote over shingles,
-    # 4-chunk pigeonhole banding (max_hamming=3 < 4 chunks guarantees
-    # a shared chunk), hamming verify on candidates. Bits come from
-    # md5 hex digits via mod/compare arithmetic — byte-identical in
-    # both engines — and the signature travels as a 64-char '0'/'1'
-    # string, so chunk keys and the hamming count are plain string
-    # ops everywhere. The production dedup_simhash (xxhash64, JVM long
-    # bit ops) stays the scale path; this twin pins the algorithm.
+    # The production operator with the md5 family (companion to
+    # dedup_minhash_lsh_md5): bigram shingles, md5-digit bits, and the
+    # same pigeonhole banding and bit_count verify as dedup_simhash.
+    # max_hamming=3 gives the 4 16-bit chunks the oracle bands on.
+    from ..operators.dedup import simhash_pairs
+
     docs = T(spark, sf, "documents").filter(F.col("lang") == "en")
-    toks = F.split(F.col("text"), " ")
-    sh = docs.select(
-        F.col("doc_id").alias("doc_id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.when(
-                        F.size(toks) >= 2,
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                    ),
-                    lambda i: F.array_join(F.slice(toks, i, 2), " "),
-                )
-            )
-        ).alias("sh"),
-    )
-    bit_aggs = [
-        F.expr(
-            "CASE WHEN sum(CASE WHEN ((instr('0123456789abcdef', "
-            f"substr(md5(sh), {b // 4 + 1}, 1)) - 1) % {2 ** (b % 4 + 1)}) "
-            f">= {2 ** (b % 4)} THEN 1 ELSE -1 END) > 0 "
-            f"THEN '1' ELSE '0' END AS b_{b}"
-        )
-        for b in range(64)
-    ]
-    sig = (
-        sh.groupBy("doc_id")
-        .agg(*bit_aggs)
-        .select(
-            "doc_id",
-            F.concat(*[F.col(f"b_{b}") for b in range(64)]).alias("sig"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    banded = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[F.substring("sig", i * 16 + 1, 16) for i in range(4)]
-            )
-        ).alias("chunk", "cv"),
-    )
-    a = banded.select(F.col("doc_id").alias("id_a"), "chunk", "cv")
-    b = banded.select(F.col("doc_id").alias("id_b"), "chunk", "cv")
-    cand = (
-        a.join(b, ["chunk", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
-    hamming = F.expr(
-        "size(filter(sequence(1, 64), "
-        "i -> substr(sig_a, i, 1) != substr(sig_b, i, 1)))"
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= 3)
-        .select("id_a", "id_b", "hamming")
-    )
+    return simhash_pairs(docs, max_hamming=3, n=2, family="md5")
 
 
 @q("dedup_minhash_lsh")  # rows-only: xxhash64 has no DuckDB equivalent
@@ -2555,8 +2429,8 @@ _PINNED = [
     "kg_materialize_edges",
     "kg_coref_triples",
     # prod dedup heads (rows-only: xxhash64 signatures are
-    # engine-specific by design; the md5 algorithm twins in half A are
-    # the full value oracles for the same banding/verify logic)
+    # engine-specific by design; the md5 twins in half A call these
+    # same operators with family="md5" and are their value oracles)
     "dedup_minhash_lsh",
     "dedup_simhash",
 ]
@@ -2683,10 +2557,9 @@ _GENERIC_HALF_B = [
 ]
 
 #: which half fills the 40 rotating window slots THIS round
-#: (round 3 ran A; round 4 ran B; round 5 runs A — the 16 round-4
-#: additions at the front of A draw their first driver rows this round,
-#: followed by the round-5 additions and 22 re-verified generics)
-_ACTIVE_HALF = "A"
+#: (round 3 ran A; round 4 ran B; round 5 ran A; now B, so fn_json and
+#: the other half-B oracle queries draw fresh driver rows)
+_ACTIVE_HALF = "B"
 
 
 def _reorder_registry() -> None:

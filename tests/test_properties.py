@@ -116,6 +116,25 @@ def test_minhash_estimates_jaccard(spark):
     assert lsh <= exact  # no false positives (exact verify)
     missed = exact - lsh
     assert len(missed) <= max(1, len(exact) // 5), f"LSH recall too low: {missed}"
+    # the verify gates on the UNROUNDED Jaccard: this pair's bigram
+    # Jaccard is exactly 2/3, emitted as 0.666667 but below 0.6666669
+    edge = spark.createDataFrame(
+        [(0, "a b c"), (1, "a b c d")], "doc_id long, text string"
+    )
+    for t, want in ((2 / 3, {(0, 1)}), (0.6666669, set())):
+        exact = {
+            (r.id_a, r.id_b)
+            for r in ngram_jaccard_pairs(
+                edge, threshold=t, n=2, max_shingle_freq=None
+            ).collect()
+        }
+        lsh = {
+            (r.id_a, r.id_b)
+            for r in minhash_lsh_pairs(
+                edge, threshold=t, k=32, bands=16, n=2
+            ).collect()
+        }
+        assert lsh == exact == want, (t, lsh, exact)
 
 
 def test_ngram_short_docs_no_crash(spark):
