@@ -8,9 +8,17 @@ designed as exact inverses: the generator entity-escapes ``text`` into the
 page body; this extractor drops head/script/style/comments/tags, unescapes,
 and collapses whitespace.
 
-Pure core is ``extract_text_py`` (used by the golden oracle in tests); the
-Spark wrapper is an Arrow-vectorized scalar pandas UDF over pandas ``.str``
-regex ops — no per-row Python in the Spark path.
+``extract_text_py`` is the one implementation: the golden oracle in tests
+calls it directly, and the Spark wrapper is an Arrow-batched scalar pandas
+UDF that maps it over each batch's rows.
+
+Every step runs in time linear in the page size, so malformed crawl pages
+cannot stall an extract task. A lazy ``<script\\b.*?</script\\s*>`` regex
+substitution is quadratic in unclosed openers: it retries the closer
+search from every opener. ``_strip_blocks`` gives the same result in one
+forward scan (see there), and the generic tag regex only sees the prefix
+that ends at the last ``>``, since every ``<`` after it fails to match
+after scanning to the end of the string.
 """
 
 from __future__ import annotations
@@ -21,11 +29,14 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-# Order matters: comments and container blocks go before generic tags.
-_RE_COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
-_RE_HEAD = re.compile(r"<head\b.*?</head\s*>", re.DOTALL | re.IGNORECASE)
-_RE_SCRIPT = re.compile(r"<script\b.*?</script\s*>", re.DOTALL | re.IGNORECASE)
-_RE_STYLE = re.compile(r"<style\b.*?</style\s*>", re.DOTALL | re.IGNORECASE)
+# (opener, closer) of each block that is replaced by one space, in order:
+# comments and container blocks go before generic tags.
+_BLOCKS = [
+    (re.compile(r"<!--"), re.compile(r"-->")),
+    (re.compile(r"<head\b", re.IGNORECASE), re.compile(r"</head\s*>", re.IGNORECASE)),
+    (re.compile(r"<script\b", re.IGNORECASE), re.compile(r"</script\s*>", re.IGNORECASE)),
+    (re.compile(r"<style\b", re.IGNORECASE), re.compile(r"</style\s*>", re.IGNORECASE)),
+]
 _RE_TAG = re.compile(r"<[^>]+>")
 _RE_WS = re.compile(r"\s+")
 _RE_NUMERIC_ENT = re.compile(r"&#(\d+);")
@@ -41,38 +52,61 @@ _NAMED_ENTITIES = [
 ]
 
 
+def _strip_blocks(s: str, opener: re.Pattern, closer: re.Pattern) -> str:
+    """``re.sub(opener + ".*?" + closer, " ", s, flags=re.DOTALL)`` in one
+    forward scan. Each opener matches a fixed number of characters, so a
+    later opener ends later; if no closer follows one opener, none
+    follows any later opener either, and the scan stops there."""
+    parts = []
+    pos = 0
+    while (o := opener.search(s, pos)) and (c := closer.search(s, o.end())):
+        parts += (s[pos : o.start()], " ")
+        pos = c.end()
+    if not parts:
+        return s
+    parts.append(s[pos:])
+    return "".join(parts)
+
+
+def _numeric_ref(m: re.Match) -> str:
+    """``&#N;`` -> chr(N); like HTML5, a code point past U+10FFFF or a
+    surrogate (which UTF-8 cannot encode) becomes U+FFFD. The value is
+    read from the last 7 digits so that ``int`` never sees a digit string
+    too long to convert."""
+    digits = m.group(1)
+    if any(map(int, digits[:-7])):
+        return "\ufffd"
+    cp = int(digits[-7:])
+    if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
+        return "\ufffd"
+    return chr(cp)
+
+
 def extract_text_py(html: str) -> str:
     """Deterministic single-string extraction (golden-oracle core)."""
     if html is None:
         return ""
-    s = _RE_COMMENT.sub(" ", html)
-    s = _RE_HEAD.sub(" ", s)
-    s = _RE_SCRIPT.sub(" ", s)
-    s = _RE_STYLE.sub(" ", s)
-    s = _RE_TAG.sub(" ", s)
-    s = _RE_NUMERIC_ENT.sub(lambda m: chr(int(m.group(1))), s)
+    s = html
+    for opener, closer in _BLOCKS:
+        s = _strip_blocks(s, opener, closer)
+    cut = s.rfind(">") + 1
+    s = _RE_TAG.sub(" ", s[:cut]) + s[cut:]
+    s = _RE_NUMERIC_ENT.sub(_numeric_ref, s)
     for ent, ch in _NAMED_ENTITIES:
         s = s.replace(ent, ch)
     return _RE_WS.sub(" ", s).strip()
 
 
+def _extract_cell(html: str | bytes | None) -> str:
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8", "replace")
+    return extract_text_py(html)
+
+
 def _extract_series(html: pd.Series) -> pd.Series:
-    """Vectorized extraction over a pandas Series (one Arrow batch)."""
-    s = html.fillna("")
-    # binary column arrives as bytes — decode once, vectorized
-    if len(s) and isinstance(s.iloc[0], (bytes, bytearray)):
-        s = s.map(lambda b: b.decode("utf-8", "replace"))
-    s = s.astype("string")
-    s = s.str.replace(_RE_COMMENT, " ", regex=True)
-    s = s.str.replace(_RE_HEAD, " ", regex=True)
-    s = s.str.replace(_RE_SCRIPT, " ", regex=True)
-    s = s.str.replace(_RE_STYLE, " ", regex=True)
-    s = s.str.replace(_RE_TAG, " ", regex=True)
-    s = s.str.replace(_RE_NUMERIC_ENT, lambda m: chr(int(m.group(1))), regex=True)
-    for ent, ch in _NAMED_ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    s = s.str.replace(_RE_WS, " ", regex=True).str.strip()
-    return s.astype(object)
+    """Extraction over one Arrow batch; binary html is decoded as UTF-8
+    with replacement characters."""
+    return html.map(_extract_cell)
 
 
 @pandas_udf(StringType())

@@ -9,11 +9,28 @@ sentence-sized units.
 
 Core is pure-Python (golden oracle shares it); Spark wrapper is a pandas
 UDF returning ``array<string>`` which callers ``posexplode``.
+
+Segmentation runs in time linear in the text length, so hostile text
+cannot stall a task:
+
+- ``_BOUNDARY`` is tried from the first terminator of each run only (its
+  lookbehind fails at once inside a run). A failed try scans the run
+  and the closers after it once; without the lookbehind every position
+  of the run retried that scan, so ``'.' * n + 'x'`` took O(n²).
+- ``_is_abbrev`` scans backward from the boundary over ASCII letters
+  and dots and stops at ``start`` or at any other character. Two
+  boundaries are separated by the whitespace of the earlier match, so
+  no character is scanned for two boundaries. Slicing ``text[start:i]``
+  per boundary and searching it with a ``$``-anchored regex was O(n)
+  per boundary, and O(n²) when the slice grows (``'A. ' * n``) or ends
+  in one long word.
+- Each sentence is sliced once, when its boundary is accepted.
 """
 
 from __future__ import annotations
 
 import re
+import string
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -28,19 +45,29 @@ _ABBREVS = {
     "oct", "nov", "dec", "u.s", "u.k",
 }
 
-# candidate boundary: terminator run + optional close quote/paren + spaces
-_BOUNDARY = re.compile(r"([.!?]+[\"')\]]*)(\s+)")
+# candidate boundary: terminator run + optional close quote/paren + spaces.
+# The lookbehind lets a match start only at the first terminator of a run;
+# a match starting inside a run would imply one at its start, so the
+# matches are those of the pattern without it.
+_BOUNDARY = re.compile(r"(?<![.!?])([.!?]+[\"')\]]*)(\s+)")
+
+_WORD_CHARS = frozenset(string.ascii_letters + ".")
 
 
-def _is_abbrev(left: str) -> bool:
-    """True if the text left of a '.' ends in a guarded abbreviation."""
-    m = re.search(r"([A-Za-z][A-Za-z.]*)$", left)
-    if not m:
-        return False
-    w = m.group(1).rstrip(".").lower()
-    if w in _ABBREVS or (w + ".") in _ABBREVS or w in {"e.g", "i.e", "u.s", "u.k"}:
-        return True
-    return len(w) == 1  # single-letter initials ("J. Smith")
+def _is_abbrev(text: str, start: int, end: int) -> bool:
+    """True if ``text[start:end]``, the text left of a '.', ends in a
+    guarded abbreviation: its trailing run of ASCII letters and dots,
+    from the run's first letter on, with trailing dots dropped. As with
+    a ``$``-anchored regex, a final newline is skipped first."""
+    if end > start and text[end - 1] == "\n":
+        end -= 1
+    i = end
+    while i > start and text[i - 1] in _WORD_CHARS:
+        i -= 1
+    while i < end and text[i] == ".":
+        i += 1
+    w = text[i:end].rstrip(".").lower()
+    return w in _ABBREVS or len(w) == 1  # single-letter initials ("J. Smith")
 
 
 def segment_py(text: str) -> list[str]:
@@ -54,7 +81,7 @@ def segment_py(text: str) -> list[str]:
         end = m.end(1)
         term = m.group(1)
         if term.startswith(".") and "!" not in term and "?" not in term:
-            if _is_abbrev(text[start : m.start(1)]):
+            if _is_abbrev(text, start, m.start(1)):
                 continue
         piece = text[start:end].strip()
         if piece:

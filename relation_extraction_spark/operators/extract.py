@@ -26,13 +26,11 @@ from pyspark.sql import functions as F
 
 from ..functions.nlp import (
     analyze_sentence_cached,
-    detect_mentions,
     extract_from_sentence,
 )
 from ..functions.segment import segment
 
 TRIPLE_COLS = "url string, sent_id int, subj string, pred string, obj string, conf double"
-MENTION_COLS = "url string, sent_id int, mention string, start int, end int"
 SENT_COLS = "url string, sent_id int, sentence string"
 
 
@@ -85,34 +83,6 @@ def _triples_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def triples_from_sentences(sentences: DataFrame) -> DataFrame:
     """D5 — OpenIE-style pattern extraction (one Arrow crossing)."""
     return sentences.mapInPandas(_triples_batches, schema=TRIPLE_COLS)
-
-
-def _mentions_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        urls, sids, ments, starts, ends = [], [], [], [], []
-        for url, sid, sent in zip(
-            pdf["url"].to_numpy(), pdf["sent_id"].to_numpy(), pdf["sentence"].to_numpy()
-        ):
-            for m in detect_mentions(sent):
-                urls.append(url)
-                sids.append(sid)
-                ments.append(m["mention"])
-                starts.append(m["start"])
-                ends.append(m["end"])
-        yield pd.DataFrame(
-            {
-                "url": pd.Series(urls, dtype=object),
-                "sent_id": pd.Series(sids, dtype="int32"),
-                "mention": pd.Series(ments, dtype=object),
-                "start": pd.Series(starts, dtype="int32"),
-                "end": pd.Series(ends, dtype="int32"),
-            }
-        )
-
-
-def mentions_from_sentences(sentences: DataFrame) -> DataFrame:
-    """D6 — NP chunker over sentences."""
-    return sentences.mapInPandas(_mentions_batches, schema=MENTION_COLS)
 
 
 def triples_from_pages(

@@ -378,17 +378,6 @@ def real_png_bytes(media_id: int, max_side: int = 32) -> bytes:
     return encode_png(arr)
 
 
-def perturbed_png_bytes(media_id: int, max_side: int = 32) -> bytes:
-    """``real_png_bytes(media_id)`` with ONE pixel inverted — the PNG
-    twin of ``perturbed_bmp_bytes``."""
-    rng = np.random.default_rng(media_id)
-    w = int(rng.integers(4, max_side))
-    h = int(rng.integers(4, max_side))
-    arr = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    arr[h // 2, w // 2] = 255 - arr[h // 2, w // 2]
-    return encode_png(arr)
-
-
 def jpeg_image_kernel(payload: bytes) -> dict:
     """Decode a real baseline JPEG via the from-spec T.81 codec
     (operators/jpegcodec.py). Same metadata contract as the PNG/BMP
@@ -477,15 +466,6 @@ def auto_audio_kernel(payload: bytes) -> dict:
     if payload[:4] == b"RIFF":
         return wav_audio_kernel(payload)
     return stub_audio_kernel(payload)
-
-
-def real_wav_bytes(media_id: int, max_samples: int = 4096) -> bytes:
-    """Deterministic REAL WAV (same samples as ``fake_audio_bytes``)."""
-    rng = np.random.default_rng(media_id ^ 0xA0D10)
-    sr = 16_000
-    n = int(rng.integers(256, max_samples))
-    samples = rng.integers(-(1 << 15), 1 << 15, size=n, dtype=np.int16)
-    return encode_wav(samples, sr)
 
 
 def ramp_wav_bytes(media_id: int) -> bytes:
@@ -579,22 +559,6 @@ def ramp_video_bytes(media_id: int) -> bytes:
     f, y, x = np.ogrid[0:n, 0:h, 0:w]
     px = ((media_id * 31 + f * 17 + y * 7 + x * 3) % 256).astype(np.uint8)
     return encode_vid1(px, fps=10)
-
-
-def stub_video_kernel(payload: bytes) -> dict:
-    if payload[:4] != b"VID1":
-        raise NotImplementedError(
-            "real video codecs are not installed; only the VID1 stub "
-            "container is decodable in this environment"
-        )
-    w, h, n, fps = struct.unpack("<iiiB", payload[4:17])
-    return {
-        "width": w,
-        "height": h,
-        "n_frames": n,
-        "fps": fps,
-        "duration_s": n / fps,
-    }
 
 
 def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:

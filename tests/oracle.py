@@ -14,12 +14,18 @@ partitioning shows up as a P/R miss (BASELINE.json:L2 P/R>=0.95).
 
 from __future__ import annotations
 
+import re
+
 from relation_extraction_spark.functions.htmltext import extract_text_py
 from relation_extraction_spark.functions.nlp import (
     detect_mentions,
     extract_from_sentence,
 )
-from relation_extraction_spark.functions.segment import segment_py
+from relation_extraction_spark.functions.segment import (
+    _ABBREVS,
+    WINDOW_WORDS,
+    segment_py,
+)
 from relation_extraction_spark.sources.corpus import (
     make_page,
     make_stale_recrawl,
@@ -75,3 +81,90 @@ def golden_mentions(pages: list[dict], lang: str = "en") -> set[tuple]:
             for m in detect_mentions(sent):
                 out.add((p["url"], sid, m["mention"], m["start"], m["end"]))
     return out
+
+
+# ------------------------------------------------------------------
+# Regex references for the linear-time text front end. These are the
+# straightforward regex formulations of html->text and segmentation that
+# functions/htmltext.py and functions/segment.py replaced with linear
+# scans; tests/test_functions.py asserts byte equality with them. They
+# are quadratic on unclosed openers and long terminator runs, so they
+# are for small inputs only, and ``reference_extract_text`` still raises
+# or returns a lone surrogate on out-of-range ``&#N;`` references.
+
+_REF_COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
+_REF_HEAD = re.compile(r"<head\b.*?</head\s*>", re.DOTALL | re.IGNORECASE)
+_REF_SCRIPT = re.compile(r"<script\b.*?</script\s*>", re.DOTALL | re.IGNORECASE)
+_REF_STYLE = re.compile(r"<style\b.*?</style\s*>", re.DOTALL | re.IGNORECASE)
+_REF_TAG = re.compile(r"<[^>]+>")
+_REF_WS = re.compile(r"\s+")
+_REF_NUMERIC_ENT = re.compile(r"&#(\d+);")
+
+_REF_NAMED_ENTITIES = [
+    ("&lt;", "<"),
+    ("&gt;", ">"),
+    ("&quot;", '"'),
+    ("&#39;", "'"),
+    ("&apos;", "'"),
+    ("&nbsp;", " "),
+    ("&amp;", "&"),  # must be last: escapes of escapes
+]
+
+
+def reference_extract_text(html: str) -> str:
+    """Regex-chain html -> text."""
+    if html is None:
+        return ""
+    s = _REF_COMMENT.sub(" ", html)
+    s = _REF_HEAD.sub(" ", s)
+    s = _REF_SCRIPT.sub(" ", s)
+    s = _REF_STYLE.sub(" ", s)
+    s = _REF_TAG.sub(" ", s)
+    s = _REF_NUMERIC_ENT.sub(lambda m: chr(int(m.group(1))), s)
+    for ent, ch in _REF_NAMED_ENTITIES:
+        s = s.replace(ent, ch)
+    return _REF_WS.sub(" ", s).strip()
+
+
+_REF_BOUNDARY = re.compile(r"([.!?]+[\"')\]]*)(\s+)")
+
+
+def reference_is_abbrev(left: str) -> bool:
+    """True if the text left of a '.' ends in a guarded abbreviation."""
+    m = re.search(r"([A-Za-z][A-Za-z.]*)$", left)
+    if not m:
+        return False
+    w = m.group(1).rstrip(".").lower()
+    if w in _ABBREVS or (w + ".") in _ABBREVS or w in {"e.g", "i.e", "u.s", "u.k"}:
+        return True
+    return len(w) == 1  # single-letter initials ("J. Smith")
+
+
+def reference_segment(text: str) -> list[str]:
+    """Regex segmentation of one document."""
+    if not text:
+        return []
+    text = text.strip()
+    sents: list[str] = []
+    start = 0
+    for m in _REF_BOUNDARY.finditer(text):
+        end = m.end(1)
+        term = m.group(1)
+        if term.startswith(".") and "!" not in term and "?" not in term:
+            if reference_is_abbrev(text[start : m.start(1)]):
+                continue
+        piece = text[start:end].strip()
+        if piece:
+            sents.append(piece)
+        start = m.end()
+    tail = text[start:].strip()
+    if tail:
+        sents.append(tail)
+    if len(sents) == 1 and not re.search(r"[.!?]", text):
+        words = text.split(" ")
+        if len(words) > WINDOW_WORDS:
+            sents = [
+                " ".join(words[i : i + WINDOW_WORDS])
+                for i in range(0, len(words), WINDOW_WORDS)
+            ]
+    return sents

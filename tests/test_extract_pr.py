@@ -4,9 +4,14 @@ set operators the engine itself exposes (U2 intersect / U3 except)."""
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
+from pyspark.sql import DataFrame
+
+from relation_extraction_spark.functions.nlp import detect_mentions
 from relation_extraction_spark.operators.asof import latest_per_key
 from relation_extraction_spark.operators.extract import (
-    mentions_from_sentences,
     sentences_from_pages,
     triples_from_sentences,
 )
@@ -15,6 +20,37 @@ from relation_extraction_spark.sources.corpus import synthetic_pages
 from .oracle import golden_mentions, golden_pages, golden_triples
 
 N = 400
+
+MENTION_COLS = "url string, sent_id int, mention string, start int, end int"
+
+
+def _mentions_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        urls, sids, ments, starts, ends = [], [], [], [], []
+        for url, sid, sent in zip(
+            pdf["url"].to_numpy(), pdf["sent_id"].to_numpy(), pdf["sentence"].to_numpy()
+        ):
+            for m in detect_mentions(sent):
+                urls.append(url)
+                sids.append(sid)
+                ments.append(m["mention"])
+                starts.append(m["start"])
+                ends.append(m["end"])
+        yield pd.DataFrame(
+            {
+                "url": pd.Series(urls, dtype=object),
+                "sent_id": pd.Series(sids, dtype="int32"),
+                "mention": pd.Series(ments, dtype=object),
+                "start": pd.Series(starts, dtype="int32"),
+                "end": pd.Series(ends, dtype="int32"),
+            }
+        )
+
+
+def mentions_from_sentences(sentences: DataFrame) -> DataFrame:
+    """D6 — NP chunker over sentences, one mapInPandas pass: the
+    single-purpose path the pipeline's fused extraction must equal."""
+    return sentences.mapInPandas(_mentions_batches, schema=MENTION_COLS)
 
 
 def _pipeline_sentences(spark):

@@ -5,9 +5,13 @@ from __future__ import annotations
 
 import struct
 
+import numpy as np
+
 from relation_extraction_spark.operators.multimodal import (
     decode_audio,
     decode_images,
+    encode_png,
+    encode_wav,
     fake_image_bytes,
     near_dup_images,
     resize_images,
@@ -16,6 +20,38 @@ from relation_extraction_spark.operators.multimodal import (
 )
 
 N = 64
+
+
+def perturbed_png_bytes(media_id: int, max_side: int = 32) -> bytes:
+    """``real_png_bytes(media_id)`` with ONE pixel inverted — the PNG
+    twin of ``perturbed_bmp_bytes``."""
+    rng = np.random.default_rng(media_id)
+    w = int(rng.integers(4, max_side))
+    h = int(rng.integers(4, max_side))
+    arr = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+    arr[h // 2, w // 2] = 255 - arr[h // 2, w // 2]
+    return encode_png(arr)
+
+
+def real_wav_bytes(media_id: int, max_samples: int = 4096) -> bytes:
+    """Deterministic REAL WAV (same samples as ``fake_audio_bytes``)."""
+    rng = np.random.default_rng(media_id ^ 0xA0D10)
+    sr = 16_000
+    n = int(rng.integers(256, max_samples))
+    samples = rng.integers(-(1 << 15), 1 << 15, size=n, dtype=np.int16)
+    return encode_wav(samples, sr)
+
+
+def stub_video_kernel(payload: bytes) -> dict:
+    """VID1 header -> clip metadata."""
+    w, h, n, fps = struct.unpack("<iiiB", payload[4:17])
+    return {
+        "width": w,
+        "height": h,
+        "n_frames": n,
+        "fps": fps,
+        "duration_s": n / fps,
+    }
 
 
 def test_image_decode_roundtrip(spark):
@@ -266,7 +302,6 @@ def test_png_bmp_meta_identity():
 
 def test_png_perturbed_twin_is_hamming_near():
     from relation_extraction_spark.operators.multimodal import (
-        perturbed_png_bytes,
         png_image_kernel,
         real_png_bytes,
     )
@@ -300,7 +335,6 @@ def test_wav_meta_identity_with_stub():
     yields identical metadata (the audio analogue of BMP==PNG)."""
     from relation_extraction_spark.operators.multimodal import (
         fake_audio_bytes,
-        real_wav_bytes,
         stub_audio_kernel,
         wav_audio_kernel,
     )
@@ -342,7 +376,6 @@ def test_decode_audio_over_real_wav_table(spark):
 
     from relation_extraction_spark.operators.multimodal import (
         decode_audio,
-        real_wav_bytes,
         stub_audio_kernel,
         fake_audio_bytes,
     )
@@ -372,7 +405,6 @@ def test_video_frame_sampling_composes_with_image_plane(spark):
         decode_images,
         ramp_video_bytes,
         sample_frames,
-        stub_video_kernel,
     )
 
     meta = stub_video_kernel(ramp_video_bytes(7))

@@ -97,3 +97,33 @@ def test_stage_outputs_flow(spark, tmp_path):
     bad_src = edges.join(ents, edges.src_id == ents.x, "left_anti").count()
     bad_dst = edges.join(ents, edges.dst_id == ents.x, "left_anti").count()
     assert bad_src == 0 and bad_dst == 0
+
+
+def test_out_of_range_char_refs_are_quarantined_not_fatal(spark, tmp_path):
+    """A page with ``&#99999999;`` (past U+10FFFF) and ``&#55296;`` (a
+    surrogate UTF-8 cannot encode) extracts to U+FFFD: the run completes
+    and that page, whose text no longer matches, is quarantined."""
+    from relation_extraction_spark.sources.corpus import PAGES_SCHEMA, make_page
+
+    rows = [make_page(42, i, 0.2, 1.0) for i in range(21)]
+    bad = rows[-1]
+    bad["html"] = bad["html"].replace(
+        b"</body>", b"<p>&#99999999; &#55296;</p></body>"
+    )
+    cols = ("url", "warc_ts", "html", "text", "lang")
+    corpus = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows], PAGES_SCHEMA
+    ).write.parquet(corpus)
+    out = str(tmp_path / "out")
+    info = run_pipeline(
+        spark, PipelineConfig(out=out, input_parquet=corpus, n_buckets=4, run_id="t")
+    )
+    assert info["extract"]["n_mismatch"] == 1
+    metrics = {
+        r.metric: r.value
+        for r in SnapshotTable(out, "metrics").read(spark).collect()
+    }
+    assert metrics["text_invariant_mismatches"] == 1.0
+    urls = {r.url for r in SnapshotTable(out, "triples").read(spark).collect()}
+    assert bad["url"] not in urls and len(urls) > 10
